@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.api.Table
 import graft.functions.Registry
+import graft.streaming.Replay
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1651,23 +1652,12 @@ object SparkEntry {
     // problem (the last open windows never cross the watermark on a
     // finite replay and append would drop them). Shares e01's oracle.
     "st03_stream_hourly" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingHourlyTypeCounts(
+      (outer, dir) => Replay.run(outer, "complete") { s =>
+        graft.streaming.Events.streamingHourlyTypeCounts(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st03_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(unix_micros(col("h")).as("h"), col("event_type"),
-            col("n"), col("sv").cast("double").as("sv"))
-          .orderBy(col("h"), col("event_type"))
-      },
+      }.select(unix_micros(col("h")).as("h"), col("event_type"),
+          col("n"), col("sv").cast("double").as("sv"))
+        .orderBy(col("h"), col("event_type")),
       hourlyOracle),
 
     // Streaming top-k: the hottest 3 event types per hourly window over
@@ -1680,21 +1670,12 @@ object SparkEntry {
     // rank never shuffles more than the closed-window rollup.
     "st14_stream_topk" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingHourlyTypeCounts(
-          graft.streaming.Events.readStream(s, dir))
-        val sink = "st14_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("h")).orderBy(col("n").desc, col("event_type"))
-        s.table(sink)
-          .select(unix_micros(col("h")).as("h"), col("event_type"), col("n"))
+        Replay.run(outer, "complete") { s =>
+          graft.streaming.Events.streamingHourlyTypeCounts(
+            graft.streaming.Events.readStream(s, dir))
+        }.select(unix_micros(col("h")).as("h"), col("event_type"), col("n"))
           .withColumn("rn", row_number().over(w).cast("long"))
           .filter(col("rn") <= 3)
           .orderBy(col("h"), col("rn"))
@@ -1717,25 +1698,14 @@ object SparkEntry {
     // pair state ages out with the watermark (st13 demonstrates that
     // operator); the replay harness runs the exact forever-state form.
     "st15_stream_hourly_users" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val agg = graft.streaming.Events.readStream(s, dir)
+      (outer, dir) => Replay.run(outer, "complete") { s =>
+        graft.streaming.Events.readStream(s, dir)
           .withColumn("h", date_trunc("hour", col("ts").cast("timestamp")))
           .select(col("h"), col("user_id"))
           .dropDuplicates("h", "user_id")
           .groupBy(col("h")).agg(count(lit(1)).as("nu"))
-        val sink = "st15_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(unix_micros(col("h")).as("h"), col("nu"))
-          .orderBy(col("h"))
-      },
+      }.select(unix_micros(col("h")).as("h"), col("nu"))
+        .orderBy(col("h")),
       """SELECT epoch_us(date_trunc('hour', ts)) AS h,
                 CAST(count(DISTINCT user_id) AS BIGINT) AS nu
          FROM events GROUP BY 1 ORDER BY h"""),
@@ -1754,21 +1724,11 @@ object SparkEntry {
     // production deployment with out-of-order arrivals would buffer
     // one watermark interval of unmatched earlier-stage events.
     "st16_stream_funnel" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingFunnel(
+      (outer, dir) => Replay.run(outer) { s =>
+        graft.streaming.Events.streamingFunnel(
           graft.streaming.Events.readStream(s, dir),
           Seq("view", "click", "purchase"))
-        val sink = "st16_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("user_id"))
-      },
+      }.orderBy(col("user_id")),
       """WITH t1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
                      WHERE event_type = 'view' GROUP BY 1),
          t2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2
@@ -1830,22 +1790,11 @@ object SparkEntry {
     // state continuity needs controllable batch boundaries and stays
     // spec-tested (StreamingSpec batch-replay equivalence).
     "st01_stream_sessionize" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingSessionize(
+      (outer, dir) => Replay.run(outer) { s =>
+        graft.streaming.Events.streamingSessionize(
           graft.streaming.Events.readStream(s, dir), 30)
-        val sink = "st01_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(col("user_id"), col("event_id"), col("session_seq"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
+      }.select(col("user_id"), col("event_id"), col("session_seq"))
+        .orderBy(col("user_id"), col("event_id")),
       sessionizeOracle),
 
     // NATIVE session windows on the stream (st25): session_window() —
@@ -1856,28 +1805,17 @@ object SparkEntry {
     // watermark past session end (last event + gap) — so the oracle is
     // the batch gap-sessionization with the same strict boundary.
     "st25_session_window" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val ev = graft.streaming.Events.readStream(s, dir)
+      (outer, dir) => Replay.run(outer) { s =>
+        graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
-        val out = ev.withWatermark("ts", "1 day")
+          .withWatermark("ts", "1 day")
           .groupBy(col("user_id"),
             session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n"))
           .select(col("user_id"),
             unix_micros(col("session_window.start")).as("ws"),
             unix_micros(col("session_window.end")).as("we"), col("n"))
-        val sink = "st25_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("user_id"), col("ws"))
-      },
+      }.orderBy(col("user_id"), col("ws")),
       """WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
          o AS (SELECT user_id, tus,
                       lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
@@ -1906,34 +1844,21 @@ object SparkEntry {
     // LOWEST doc id per content digest (arrival-order independent), so
     // the verdict relation is SQL-expressible: owner = min(doc_id) over
     // the content group — a strict oracle for the v2 arbitrary-state
-    // path. State store conf is set/restored around the run.
+    // path. The RocksDB provider conf stays on the replay's child session.
     "st02_stream_dedup_owners" -> api(
-      (outer, dir) => {
-        // child session: RocksDB provider + right-sized state partitions
-        // stay scoped to this query, nothing to save/restore
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
+      (outer, dir) => Replay.run(outer) { s =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        Registry.registerAll(s)
         val schema = s.read.parquet(s"$dir/documents.parquet").schema
         val docs = s.readStream.schema(schema)
-          .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
+          .parquet(Replay.linkDir(s"$dir/documents.parquet"))
           .select(col("doc_id"), col("text"))
         val planted = docs.unionByName(
           docs.filter(col("doc_id") < 50)
             .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-        val out = graft.streaming.Events.streamingDedupOwners(planted, "doc_id", "text")
-        val sink = "st02_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(col("doc_id"), col("owner_id"), col("is_dup"))
-          .orderBy(col("doc_id"))
-      },
+        graft.streaming.Events.streamingDedupOwners(planted, "doc_id", "text")
+      }.select(col("doc_id"), col("owner_id"), col("is_dup"))
+        .orderBy(col("doc_id")),
       """WITH u AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -2128,10 +2053,7 @@ object SparkEntry {
     // passes — the only join shape that runs unboundedly. Inner rows
     // emit as both sides arrive; the batch join is the exact oracle.
     "st18_stream_interval_join" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2140,19 +2062,11 @@ object SparkEntry {
         val buys = ev.filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user_id"),
             col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-        val out = graft.streaming.Events.streamingIntervalJoin(
-          views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
-          windowSeconds = 1800L)
-        val sink = "st18_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("view_id"), col("purchase_id"), col("user_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("view_id"), col("purchase_id"))
-      },
+        graft.streaming.Events.streamingIntervalJoin(
+            views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
+            windowSeconds = 1800L)
+          .select(col("view_id"), col("purchase_id"), col("user_id"))
+      }.orderBy(col("view_id"), col("purchase_id")),
       """SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id
          FROM events v JOIN events p
            ON v.user_id = p.user_id
@@ -2183,10 +2097,7 @@ object SparkEntry {
     // is the (bounded) site catalog. Semantics match geo01 exactly;
     // the oracle replays the batch assignment + rollup.
     "st20_stream_geo_enrich" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer, "complete") { s =>
         val sixt = lit(0.0625)
         val catalog = graft.ops.Geo.siteCatalog(
           geoGridSuppliers(s, dir), "s_suppkey", "slat", "slon",
@@ -2195,21 +2106,13 @@ object SparkEntry {
           .select(col("event_id"),
             ((col("user_id") % 320).cast("double") * sixt).as("plat"),
             (((col("user_id") * 7) % 320).cast("double") * sixt).as("plon"))
-        val out = graft.ops.Geo.nearestByCatalog(
+        graft.ops.Geo.nearestByCatalog(
             ev, "plat", "plon", catalog, boxDeg = 0.5,
             keyOut = "site", distCol = "d2",
             metric = graft.ops.Geo.planarSq)
           .groupBy(col("site"))
           .agg(count(lit(1)).as("n"))
-        val sink = "st20_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("site"))
-      },
+      }.orderBy(col("site")),
       """WITH e AS (SELECT event_id,
                   (user_id % 320) * CAST(0.0625 AS DOUBLE) AS plat,
                   ((user_id * 7) % 320) * CAST(0.0625 AS DOUBLE) AS plon
@@ -2236,10 +2139,7 @@ object SparkEntry {
     // that emission boundary exactly (the st04 discipline). Single-file
     // feed → one batch → the 2h delay needs no disorder headroom.
     "st19_stream_left_outer_join" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2248,21 +2148,12 @@ object SparkEntry {
         val buys = ev.filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user_id"),
             col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-        val out = graft.streaming.Events.streamingIntervalJoin(
-          views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
-          windowSeconds = 1800L, watermark = "2 hours",
-          joinType = "left_outer")
-        val sink = "st19_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("view_id"), col("user_id"), col("purchase_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .orderBy(col("view_id"), col("purchase_id").asc_nulls_last)
-      },
+        graft.streaming.Events.streamingIntervalJoin(
+            views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
+            windowSeconds = 1800L, watermark = "2 hours",
+            joinType = "left_outer")
+          .select(col("view_id"), col("user_id"), col("purchase_id"))
+      }.orderBy(col("view_id"), col("purchase_id").asc_nulls_last),
       """WITH v AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS vts
                     FROM events WHERE event_type = 'view'),
          p AS (SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS pts
@@ -2295,10 +2186,7 @@ object SparkEntry {
     // Purchases with no prior view never enter the inner join (strict
     // ASOF). Single-file feed → one batch → no disorder headroom needed.
     "st21_stream_asof_enrich" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2307,23 +2195,15 @@ object SparkEntry {
         val buys = ev.filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user_id"),
             col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-        val out = graft.streaming.Events.streamingAsOfEnrich(
-          views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
-          probeIdCol = "purchase_id", quotePayload = Seq("view_id"),
-          horizonSeconds = 1800L, windowDuration = "1 hour",
-          watermark = "2 hours")
-        val sink = "st21_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("purchase_id"),
+        graft.streaming.Events.streamingAsOfEnrich(
+            views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
+            probeIdCol = "purchase_id", quotePayload = Seq("view_id"),
+            horizonSeconds = 1800L, windowDuration = "1 hour",
+            watermark = "2 hours")
+          .select(col("purchase_id"),
             col("p_user_id").as("user_id"),
             col("view_id").as("last_view_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("purchase_id"))
-      },
+      }.orderBy(col("purchase_id")),
       """WITH v AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS vts
                     FROM events WHERE event_type = 'view'),
          p AS (SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS pts
@@ -2353,10 +2233,7 @@ object SparkEntry {
     // Emission strictly below the final watermark (st21 boundary); the
     // oracle replays windows, reference and chain verbatim.
     "st22_stream_drift_psi" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val E = graft.streaming.Events
         val batch = E.readRaw(s, dir).select(col("ts"), col("value"))
           .filter(col("value").isNotNull)
@@ -2370,20 +2247,12 @@ object SparkEntry {
         val ref = (0 until 8).map(i => refRows.getOrElse(i.toLong, 0L))
         val ev = E.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
-        val out = E.streamingDriftPsi(ev, "value", "ts", ref,
-          lo = 0.0, width = 25.0, windowDuration = "3 days",
-          watermark = "1 day")
-        val sink = "st22_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(unix_micros(col("window_start")).as("ws"),
+        E.streamingDriftPsi(ev, "value", "ts", ref,
+            lo = 0.0, width = 25.0, windowDuration = "3 days",
+            watermark = "1 day")
+          .select(unix_micros(col("window_start")).as("ws"),
             col("n_cur"), col("psi"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("ws"))
-      },
+      }.orderBy(col("ws")),
       """WITH e AS (SELECT epoch_us(ts) AS tus, value FROM events
                     WHERE value IS NOT NULL),
          mn AS (SELECT min(tus) AS t0, max(tus) AS t1 FROM e),
@@ -2453,35 +2322,22 @@ object SparkEntry {
     // sink's closed windows (pr21 arithmetic); oracle re-derives the
     // same windows under the strict end < maxTs − delay boundary.
     "st23_stream_k_anon" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val E = graft.streaming.Events
         val ev = E.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
           .withColumn("ub", coalesce(col("user_id") % 10, lit(-1L)))
-        val sizes = E.streamingQuasiIdSizes(ev, "ts",
-          Seq("event_type", "ub"), "7 days", "1 day")
-        val sink = "st23_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = sizes
+        E.streamingQuasiIdSizes(ev, "ts",
+            Seq("event_type", "ub"), "7 days", "1 day")
           .select(unix_micros(col("window_start")).as("ws"),
             col("event_type"), col("ub"), col("n"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .groupBy(col("ws"))
-          .agg(count(lit(1)).as("n_groups"),
-            min(col("n")).as("k_actual"),
-            sum(when(col("n") < 40, 1L).otherwise(0L)).as("n_violating"),
-            sum(when(col("n") < 40, col("n")).otherwise(0L))
-              .as("rows_at_risk"))
-          .orderBy(col("ws"))
-      },
+      }.groupBy(col("ws"))
+        .agg(count(lit(1)).as("n_groups"),
+          min(col("n")).as("k_actual"),
+          sum(when(col("n") < 40, 1L).otherwise(0L)).as("n_violating"),
+          sum(when(col("n") < 40, col("n")).otherwise(0L))
+            .as("rows_at_risk"))
+        .orderBy(col("ws")),
       """WITH e AS (SELECT epoch_us(ts) AS tus, event_type,
                            coalesce(user_id % 10, -1) AS ub FROM events),
          mn AS (SELECT max(tus) AS t1 FROM e),
@@ -2509,29 +2365,17 @@ object SparkEntry {
     // INLINE per token; the kept test is the exact integer comparison
     // sum_fp > thr·n — no division anywhere.
     "st24_stream_quality_gate" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val E = graft.streaming.Events
         val ev = E.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
-        val gated = E.streamingQualityGate(ev, "ts", "props",
-          E.demoQualityWeights,
-          thresholdLogitFp = 0L, windowDuration = "7 days",
-          watermark = "1 day")
-        val sink = "st24_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = gated
+        E.streamingQualityGate(ev, "ts", "props",
+            E.demoQualityWeights,
+            thresholdLogitFp = 0L, windowDuration = "7 days",
+            watermark = "1 day")
           .select(unix_micros(col("window_start")).as("ws"),
             col("n_docs"), col("n_kept"), col("sum_fp_kept"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("ws"))
-      },
+      }.orderBy(col("ws")),
       """WITH e AS (SELECT epoch_us(ts) AS tus,
                   list_filter(string_split_regex(lower(coalesce(props, '')), '\W+'),
                               x -> x <> '') AS toks
@@ -5091,23 +4935,12 @@ object SparkEntry {
     // Oracle = batch windows with end <= max(ts) - delay (boundary
     // inclusive, verified by probe).
     "st04_stream_append" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingHourlyClosed(
+      (outer, dir) => Replay.run(outer) { s =>
+        graft.streaming.Events.streamingHourlyClosed(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st04_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(unix_micros(col("h_end")).as("h_end"), col("event_type"),
-            col("n"), col("sv").cast("double").as("sv"))
-          .orderBy(col("h_end"), col("event_type"))
-      },
+      }.select(unix_micros(col("h_end")).as("h_end"), col("event_type"),
+          col("n"), col("sv").cast("double").as("sv"))
+        .orderBy(col("h_end"), col("event_type")),
       """WITH mx AS (SELECT max(ts) AS mt FROM events)
          SELECT epoch_us(date_trunc('hour', ts) + INTERVAL 1 HOUR) AS h_end,
                 event_type, count(*) AS n,
@@ -5248,24 +5081,13 @@ object SparkEntry {
     // (last event + gap), so the oracle filters the batch-derived
     // sessions by the same closed-session predicate (st04 mechanics).
     "st17_stream_session_window" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingSessionWindows(
+      (outer, dir) => Replay.run(outer) { s =>
+        graft.streaming.Events.streamingSessionWindows(
           graft.streaming.Events.readStream(s, dir), 30)
-        val sink = "st17_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(col("user_id"), unix_micros(col("s_start")).as("s_start"),
-            unix_micros(col("s_end")).as("s_end"), col("n_events"),
-            col("cents"))
-          .orderBy(col("user_id"), col("s_start"))
-      },
+      }.select(col("user_id"), unix_micros(col("s_start")).as("s_start"),
+          unix_micros(col("s_end")).as("s_end"), col("n_events"),
+          col("cents"))
+        .orderBy(col("user_id"), col("s_start")),
       """WITH x AS (
            SELECT user_id, event_id, ts, value,
                   CASE WHEN lag(ts) OVER w IS NULL
@@ -5794,27 +5616,18 @@ object SparkEntry {
     // dimension (event_type -> category) — the production enrichment
     // shape (dim re-read per micro-batch, never shuffled into the stream)
     "st05_stream_static" -> api(
-      (s, dir) => {
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer, "complete") { s =>
         import s.implicits._
         val dim = Seq(("view", "engagement"), ("click", "engagement"),
           ("purchase", "transactional"), ("signup", "transactional"),
           ("error", "ops")).toDF("event_type", "category")
-        val out = graft.streaming.Events.readStream(s, dir)
+        graft.streaming.Events.readStream(s, dir)
           .join(broadcast(dim), "event_type")
           .groupBy(col("category"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,6)")).as("sv"))
-        val sink = "st05_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(col("category"), col("n"), col("sv").cast("double").as("sv"))
-          .orderBy(col("category"))
-      },
+      }.select(col("category"), col("n"), col("sv").cast("double").as("sv"))
+        .orderBy(col("category")),
       """SELECT CASE event_type WHEN 'view' THEN 'engagement'
                                 WHEN 'click' THEN 'engagement'
                                 WHEN 'purchase' THEN 'transactional'
@@ -5929,16 +5742,7 @@ object SparkEntry {
     // join state is evicted as event time advances (the unbounded-stream
     // contract); a finite replay emits exactly the batch join
     "st06_stream_stream_join" -> api(
-      (outer, dir) => {
-        // Stream-stream join state costs scale with shuffle partitions
-        // (4 state stores per partition per batch, each checkpointed):
-        // size them to the join-key cardinality (~1.5k users), not the
-        // batch default. An isolated child session keeps the conf from
-        // leaking into other queries; on a cluster this is the same knob
-        // sized to executor count instead.
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val E = graft.streaming.Events
         def side(t: String, p: String) = E.readStream(s, dir)
           .filter(col("event_type") === t)
@@ -5946,22 +5750,14 @@ object SparkEntry {
             col("ts").cast("timestamp").as(s"${p}_ts"),
             col("event_id").as(s"${p}_id"))
           .withWatermark(s"${p}_ts", "2 hours")
-        val joined = side("purchase", "p").join(side("view", "v"),
-          col("p_user") === col("v_user") &&
-            col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-            col("v_ts") <= col("p_ts"))
-        val sink = "st06_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = joined.select(col("p_id"), col("v_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .agg(count(lit(1)).as("n_pairs"),
-            count_distinct(col("p_id")).as("n_purchases"),
-            min(col("p_id")).as("mn_p"), min(col("v_id")).as("mn_v"))
-      },
+        side("purchase", "p").join(side("view", "v"),
+            col("p_user") === col("v_user") &&
+              col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+              col("v_ts") <= col("p_ts"))
+          .select(col("p_id"), col("v_id"))
+      }.agg(count(lit(1)).as("n_pairs"),
+          count_distinct(col("p_id")).as("n_purchases"),
+          min(col("p_id")).as("mn_p"), min(col("v_id")).as("mn_v")),
       """SELECT count(*) AS n_pairs,
                 CAST(count(DISTINCT p.event_id) AS BIGINT) AS n_purchases,
                 min(p.event_id) AS mn_p, min(v.event_id) AS mn_v
@@ -5976,28 +5772,19 @@ object SparkEntry {
     // store; the reference broadcasts per micro-batch), the shape for
     // continuous corpus ingestion against yesterday's snapshot
     "st07_stream_ref_dedup" -> api(
-      (s, dir) => {
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val ref = s.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 7 === 0)
           .select(md5(col("text")).as("digest")).distinct()
-        val stream = s.readStream
+        s.readStream
           .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-          .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
+          .parquet(Replay.linkDir(s"$dir/documents.parquet"))
           .withColumn("digest", md5(col("text")))
-        val fresh = stream.join(broadcast(ref), Seq("digest"), "left_anti")
-        val sink = "st07_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = fresh.select(col("doc_id"), col("n_chars"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .agg(count(lit(1)).as("n_fresh"),
-            sum(col("n_chars")).cast("long").as("sc"),
-            min(col("doc_id")).as("mn"))
-      },
+          .join(broadcast(ref), Seq("digest"), "left_anti")
+          .select(col("doc_id"), col("n_chars"))
+      }.agg(count(lit(1)).as("n_fresh"),
+          sum(col("n_chars")).cast("long").as("sc"),
+          min(col("doc_id")).as("mn")),
       """SELECT count(*) AS n_fresh, CAST(sum(n_chars) AS BIGINT) AS sc,
                 min(doc_id) AS mn
          FROM documents d
@@ -7801,21 +7588,15 @@ object SparkEntry {
     // hourly oracle. Integer time arithmetic end to end (readStreamRaw).
     "st08_stream_file_sink" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = Replay.session(outer)
         val out = graft.streaming.Events.readStreamRaw(s, dir)
           .select(
             expr(s"ts - ts % ${graft.streaming.Events.MicrosPerHour}").as("h"),
             col("event_type"), col("value"))
         val base = scratchDir(s"st08_sink_${new java.io.File(dir).getName}")
-        val q = out.writeStream.format("parquet")
+        Replay.drain(out)(_.format("parquet")
           .option("path", s"$base/data")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+          .option("checkpointLocation", s"$base/ckpt"))
         s.read.parquet(s"$base/data")
           .groupBy(col("h"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -7833,26 +7614,16 @@ object SparkEntry {
     // the proof that curation logic runs identically in batch backfill
     // and streaming ingest.
     "st09_stream_doc_pipeline" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+      (outer, dir) => Replay.run(outer) { s =>
         val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val out = s.readStream.schema(schema)
-          .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
+        s.readStream.schema(schema)
+          .parquet(Replay.linkDir(s"$dir/documents.parquet"))
           .filter(col("n_chars") >= 200)
           .withColumn("text", coalesce(col("text"), lit("")))
           .select(col("doc_id"), col("lang"),
             graft.ops.TextAnalysis.langId(col("text")).as("pred_lang"),
             graft.ops.TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"))
-        val sink = "st09_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("doc_id"))
-      },
+      }.orderBy(col("doc_id")),
       s"""WITH RECURSIVE $bpeCountCtes,
          f AS (SELECT doc_id, lang, coalesce(text, '') AS text
                FROM documents WHERE n_chars >= 200),
@@ -8860,22 +8631,11 @@ object SparkEntry {
     // st03; the oracle re-derives the expansion arithmetically in BIGINT
     // microseconds (base slide-floor minus 0..3 slides).
     "st10_stream_sliding" -> api(
-      (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
-        val out = graft.streaming.Events.streamingSlidingTypeCounts(
+      (outer, dir) => Replay.run(outer, "complete") { s =>
+        graft.streaming.Events.streamingSlidingTypeCounts(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st10_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
-          .select(unix_micros(col("ws")).as("ws"), col("event_type"), col("n"))
-          .orderBy(col("ws"), col("event_type"))
-      },
+      }.select(unix_micros(col("ws")).as("ws"), col("event_type"), col("n"))
+        .orderBy(col("ws"), col("event_type")),
       """WITH b AS (SELECT event_type,
                   epoch_us(ts) // 1800000000 * 1800000000 AS base
            FROM events),
@@ -10814,44 +10574,36 @@ object SparkEntry {
     // exactly.
     "st13_stream_dedup_watermark" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
         val feed = scratchDir("st13_feed")
-        val ev = graft.streaming.Events.readRaw(s, dir)
-          .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-        val redelivered = ev.filter(col("event_id") % 7 === 0)
-          .withColumn("ts", col("ts") +
-            lit(5L * graft.streaming.Events.MicrosPerMinute))
-        ev.unionByName(redelivered)
-          .repartitionByRange(3, col("ts"))
-          .write.mode("overwrite").parquet(feed)
         val schema = "event_id LONG, ts LONG, event_type STRING, value DOUBLE"
-        val sink = "st13_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .withColumn("tst", expr("timestamp_micros(ts)"))
-          // delay must cover the feed's max DISORDER: file admission
-          // order is not ts-ascending (mtime ties break arbitrarily),
-          // so a whole later-range file can arrive first and a short
-          // delay would late-drop the earlier ranges wholesale. The
-          // replay's disorder bound is the corpus span (31 days); a
-          // live in-order stream would use minutes here.
-          .withWatermark("tst", "31 days")
-          .dropDuplicatesWithinWatermark("event_id")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_unique"),
-            expr("CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)")
-              .as("sv"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        val feedCounts = s.read.schema(schema).parquet(feed)
+        val unique = Replay.run(outer, "complete") { s =>
+          val ev = graft.streaming.Events.readRaw(s, dir)
+            .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+          val redelivered = ev.filter(col("event_id") % 7 === 0)
+            .withColumn("ts", col("ts") +
+              lit(5L * graft.streaming.Events.MicrosPerMinute))
+          ev.unionByName(redelivered)
+            .repartitionByRange(3, col("ts"))
+            .write.mode("overwrite").parquet(feed)
+          s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(feed)
+            .withColumn("tst", expr("timestamp_micros(ts)"))
+            // delay must cover the feed's max DISORDER: file admission
+            // order is not ts-ascending (mtime ties break arbitrarily),
+            // so a whole later-range file can arrive first and a short
+            // delay would late-drop the earlier ranges wholesale. The
+            // replay's disorder bound is the corpus span (31 days); a
+            // live in-order stream would use minutes here.
+            .withWatermark("tst", "31 days")
+            .dropDuplicatesWithinWatermark("event_id")
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n_unique"),
+              expr("CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)")
+                .as("sv"))
+        }
+        val feedCounts = unique.sparkSession.read.schema(schema).parquet(feed)
           .groupBy(col("event_type")).agg(count(lit(1)).as("n_feed"))
-        s.table(sink).join(feedCounts, Seq("event_type"))
+        unique.join(feedCounts, Seq("event_type"))
           .select(col("event_type"), col("n_unique"), col("sv"),
             col("n_feed"), (col("n_feed") - col("n_unique")).as("dup_dropped"))
           .orderBy(col("event_type"))
@@ -10872,9 +10624,7 @@ object SparkEntry {
 
     "st11_stream_cdc_upsert" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = Replay.session(outer)
         val feed = scratchDir("st11_feed")
         graft.streaming.Events.readRaw(s, dir)
           .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -10883,16 +10633,13 @@ object SparkEntry {
         val schema = "user_id LONG, ts LONG, event_type STRING, value DOUBLE"
         var target = s.read.schema(schema).parquet(feed).where(lit(false))
           .localCheckpoint(true)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        Replay.drain(s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(feed)) {
+          _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             target = graft.ops.Cdc.upsert(target, batch,
               Seq("user_id"), "ts").localCheckpoint(true)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+        }
         target.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_users"),
             round(sum(col("value")), 6).as("sv"))
@@ -10920,9 +10667,7 @@ object SparkEntry {
     // path end to end — including that incremental == recompute.
     "st12_stream_view_maintenance" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = Replay.session(outer)
         val feed = scratchDir("st12_feed")
         graft.streaming.Events.readRaw(s, dir)
           .select(col("user_id").as("k"), col("ts").as("ver"),
@@ -10936,10 +10681,9 @@ object SparkEntry {
         var view = snap.groupBy(col("g"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
           .localCheckpoint(true)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        Replay.drain(s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(feed)) {
+          _.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // view first (adjustments subtract against PRE-batch state),
             // then the snapshot folds the same batch
             view = graft.ops.Cdc.maintainCountSum(snap, batch,
@@ -10947,9 +10691,7 @@ object SparkEntry {
             snap = graft.ops.Cdc.upsert(snap, batch, Seq("k"), "ver")
               .localCheckpoint(true)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+        }
         view.orderBy(col("g"))
       },
       """WITH latest AS (
@@ -14606,7 +14348,7 @@ object SparkEntry {
 
   /** Per-query scratch directory under [[scratchRoot]] — UUID-suffixed so
     * repeated invocations of the same query never collide (same
-    * discipline as the st01/st02 sink names); the shared root's one
+    * discipline as the replay sink names); the shared root's one
     * shutdown hook sweeps everything on JVM exit.
     */
   private def scratchDir(prefix: String): String =

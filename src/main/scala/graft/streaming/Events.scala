@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One event's session assignment from [[Events.streamingSessionize]]. */
@@ -133,19 +133,20 @@ object Events {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** True when the events parquet stores `ts` with the TIMESTAMP(NANOS)
-    * logical type — detected by whether Spark's native schema inference
-    * accepts the footer. The driver regenerated the fixture as
-    * timestamp[us] between rounds (TESTDATA.md notwithstanding), so the
-    * readers probe the actual file instead of assuming either unit; the
-    * probe is per-call footer metadata only, no data scan.
+  /** The events file's inferred schema, or None when it stores `ts` with
+    * the TIMESTAMP(NANOS) logical type — detected by whether Spark's
+    * native schema inference accepts the footer. The fixture has been
+    * regenerated as timestamp[us] (TESTDATA.md notwithstanding), so the
+    * readers probe the actual file instead of assuming either unit. The
+    * probe reads footer metadata only, no data, and the readers pass its
+    * result on as their explicit schema, so each read infers once.
     */
-  private def nanosEncoded(spark: SparkSession, path: String): Boolean =
-    scala.util.Try(spark.read.parquet(path).schema("ts").dataType) match {
-      case scala.util.Success(org.apache.spark.sql.types.TimestampNTZType) => false
-      case scala.util.Success(_: org.apache.spark.sql.types.TimestampType) => false
-      case _ => true // inference rejected the footer => NANOS logical type
-    }
+  private def microsSchema(spark: SparkSession, path: String): Option[StructType] =
+    scala.util.Try(spark.read.parquet(path).schema).toOption.filter(
+      _.find(_.name == "ts").exists(_.dataType match {
+        case TimestampNTZType | _: TimestampType => true
+        case _ => false // NANOS read as a long
+      }))
 
   /** The events corpus with `ts` as canonical epoch-MICROS long —
     * unit-robust: probes the parquet logical type and normalizes either
@@ -157,13 +158,15 @@ object Events {
     */
   def readRaw(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    if (nanosEncoded(spark, path))
-      spark.read.schema(EventsNanosSchema).parquet(path)
-        .withColumn("ts", expr("ts div 1000"))
-    else
-      spark.read.parquet(path)
-        // NTZ -> LTZ cast is lossless under the UTC session timezone
-        .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+    microsSchema(spark, path) match {
+      case Some(schema) =>
+        spark.read.schema(schema).parquet(path)
+          // NTZ -> LTZ cast is lossless under the UTC session timezone
+          .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+      case None =>
+        spark.read.schema(EventsNanosSchema).parquet(path)
+          .withColumn("ts", expr("ts div 1000"))
+    }
   }
 
   /** Read the events corpus with `ts` as a micro-precision NTZ
@@ -192,14 +195,14 @@ object Events {
     */
   def readStreamRaw(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    if (nanosEncoded(spark, path))
-      spark.readStream.schema(EventsNanosSchema)
-        .parquet(Replay.linkDir(path))
-        .withColumn("ts", expr("ts div 1000"))
-    else
-      spark.readStream.schema(spark.read.parquet(path).schema)
-        .parquet(Replay.linkDir(path))
-        .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+    microsSchema(spark, path) match {
+      case Some(schema) =>
+        spark.readStream.schema(schema).parquet(Replay.linkDir(path))
+          .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+      case None =>
+        spark.readStream.schema(EventsNanosSchema).parquet(Replay.linkDir(path))
+          .withColumn("ts", expr("ts div 1000"))
+    }
   }
 
   /** Tumbling event-time aggregation (batch). */

@@ -181,4 +181,20 @@ class InvarianceSpec extends GraftSuite {
     assert(expected.nonEmpty)
     for (e <- layouts(edges)) assert(run(e) == expected)
   }
+
+  test("st04 and st16 replays are identical with 1 and 8 state partitions") {
+    def run(q: String, advisoryBytes: Long) = {
+      val outer = spark.newSession()
+      outer.conf.set("spark.sql.shuffle.partitions", 8L)
+      outer.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisoryBytes)
+      val df = SparkEntry.queries(q)(outer, s"${sys.props("user.home")}/testdata/sf0.01")
+      (df.sparkSession.conf.get("spark.sql.shuffle.partitions"), rows(df))
+    }
+    for (q <- Seq("st04_stream_append", "st16_stream_funnel")) {
+      val (one, expected) = run(q, 64L << 20)
+      val (eight, got) = run(q, 1L)
+      assert(one == "1" && eight == "8", s"$q ran with $one and $eight state partitions")
+      assert(expected.nonEmpty && got == expected, q)
+    }
+  }
 }
