@@ -171,8 +171,11 @@ object Bench {
     def qmap(rs: Seq[(String, Double, Double)]): String =
       rs.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
+    // the core count the session runs local[…] with; load.cpus is the
+    // host's, which differs whenever SPARK_GRAFT_CPUS is set below it
+    val coresConf = cpus.toIntOption.fold("\"" + cpus + "\"")(_.toString)
     val loadJson =
-      s""""load":{"avg_start":${fmt(loadStart)},"avg_end":${fmt(loadAvg)},""" +
+      s""""cores_conf":$coresConf,"load":{"avg_start":${fmt(loadStart)},"avg_end":${fmt(loadAvg)},""" +
         s""""cpus":${Runtime.getRuntime.availableProcessors}}"""
 
     val fullJson =

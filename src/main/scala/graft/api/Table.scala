@@ -1,5 +1,9 @@
 package graft.api
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -386,9 +390,42 @@ object Table {
     * scan; filters/partition-pruning are automatic.
     */
   def fromParquet(spark: SparkSession, path: String, columns: Seq[String] = Nil): Table = {
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     apply(if (columns.nonEmpty) df.select(columns.map(df.col): _*) else df)
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * Spark infers a parquet schema by reading footers in a Spark job, even
+    * for one file. When `path` is one regular file, this reads its footer
+    * on the driver instead, converts it with the converter Spark's own
+    * inference uses (so the row-metadata key, INT96, timestamp-NTZ and
+    * binary-as-string settings apply unchanged) and passes the result on
+    * as the read's schema. Directories, globs, hidden names, missing paths
+    * and unreadable footers go through `spark.read.parquet` itself, which
+    * keeps partition discovery and Spark's own errors. Nothing is cached:
+    * every call reads the footer again, so a rewritten file is always seen.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    singleFileFooter(spark, path) match {
+      case Some(footer) =>
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The footer of `path` when it names one regular file, not a glob and
+    * not a hidden (`_`/`.`) name, whose footer reads.
+    */
+  private def singleFileFooter(spark: SparkSession, path: String): Option[Footer] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else scala.util.Try {
+      val p = new Path(path)
+      val conf = spark.sessionState.newHadoopConf()
+      val hidden = p.getName.startsWith("_") || p.getName.startsWith(".")
+      if (hidden || !p.getFileSystem(conf).getFileStatus(p).isFile) None
+      else Some(new Footer(p, ParquetFileReader.readFooter(conf, p, SKIP_ROW_GROUPS)))
+    }.toOption.flatten
 
   /** CSV reader with header + schema inference, compressed files auto-detected
     * (reference: vinum/io/arrow.py:64-108 `read_csv`).
@@ -661,7 +698,7 @@ object Table {
         try {
           binds.foreach { b =>
             val df = b.kind match {
-              case "parquet" => spark.read.parquet(b.path)
+              case "parquet" => readParquet(spark, b.path)
               case "csv" => spark.read.option("header", b.header.toString)
                 .option("sep", b.delim).option("inferSchema", "true")
                 .csv(b.path)

@@ -115,6 +115,12 @@ object Registry {
         graft.sql.ReverseSuffixFrames))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.sql.ReverseSuffixFrames
+    // sort inputs below AQE's minimum partition size in one task, without
+    // the range exchange's sampling job (see [[graft.sql.SmallSortOneTask]]);
+    // after DeferExpensiveProjection, which must still see Sort(Project)
+    if (!spark.experimental.extraOptimizations.contains(graft.sql.SmallSortOneTask))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.sql.SmallSortOneTask
     val reg = spark.sessionState.functionRegistry
     def f(name: String)(builder: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")

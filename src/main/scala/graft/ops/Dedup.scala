@@ -369,33 +369,6 @@ object Dedup {
         call_function("jaccard_sorted", col("sh_a"), col("sh_b")).as("jaccard"))
   }
 
-  /** Exact n-gram Jaccard with cheap blocking: candidate pairs agree on
-    * `blockCol` and differ by at most `lengthBand` in `lenCol`.
-    *
-    * SCALE WARNING: the within-block self-join is quadratic in block
-    * size — same-block volume grows linearly with the corpus, candidate
-    * pairs quadratically. Use [[nearDupJaccard]] (banded candidates +
-    * exact verify) for large corpora; this variant exists for small
-    * batches where an attribute block is genuinely selective.
-    *
-    * Deliberately two-phase: candidates are enumerated on SLIM rows
-    * (id, block, len) and the shingle arrays are only attached to
-    * surviving pairs afterward. A fused self-join of the array-laden
-    * frame profiles ~6x slower — join machinery (hashing, sorting,
-    * row copies) over wide array rows dominates everything else.
-    */
-  def blockedJaccard(df: DataFrame, idCol: String, textCol: String,
-                     blockCol: String, lenCol: String, lengthBand: Int,
-                     shingleK: Int = 3, threshold: Double = 0.0): DataFrame = {
-    val slim = df.select(col(idCol).as("id"), col(blockCol).as("blk"), col(lenCol).as("len"))
-    val cand = slim.as("a").join(slim.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id") &&
-          abs(col("a.len") - col("b.len")) <= lengthBand)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    ngramJaccard(df, cand, idCol, textCol, shingleK)
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Global first-occurrence segment deduplication (C4/CCNet-style line
     * dedup, generalized over the delimiter): split every document into
     * segments, keep each distinct segment only at its first occurrence

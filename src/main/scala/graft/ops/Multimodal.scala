@@ -470,16 +470,6 @@ object Multimodal {
       Some((w, h, px))
     }
 
-    /** Per-channel (R, G, B) pixel means of a PNG payload. */
-    def pngChannelMeans(b: Array[Byte]): Option[(Double, Double, Double)] =
-      pngPixels(b).map { case (_, _, px) =>
-        val sums = new Array[Long](3)
-        var i = 0
-        while (i < px.length) { sums(i % 3) += px(i) & 0xff; i += 1 }
-        val n = px.length / 3
-        (sums(0).toDouble / n, sums(1).toDouble / n, sums(2).toDouble / n)
-      }
-
     /** Dispatch on magic bytes; unsupported formats are reported, not faked. */
     def decode(id: Long, b: Array[Byte]): MediaFeatures = {
       val n = if (b == null) 0 else b.length

@@ -37,7 +37,7 @@ object Wap {
       "." + destPath.getName + ".staging-" +
         java.util.UUID.randomUUID.toString.take(8))
     df.write.mode("overwrite").parquet(staging.toString)
-    try audit(spark.read.parquet(staging.toString))
+    try audit(graft.api.Table.readParquet(spark, staging.toString))
     catch {
       case e: Throwable => throw new IllegalStateException(
         s"WAP audit failed — publish aborted, dest untouched, staging " +
@@ -210,7 +210,7 @@ object Wap {
             .filter(_.startsWith("v=")).sorted.mkString(", ")
         s"version $n is not published under $root (have: $have)"
       })
-      spark.read.parquet(p.toString)
+      graft.api.Table.readParquet(spark, p.toString)
     }
   }
 }

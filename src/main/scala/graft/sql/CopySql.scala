@@ -300,7 +300,7 @@ object CopySql {
       st.format match {
         case "parquet" =>
           w.parquet(st.path)
-          spark.read.parquet(st.path)
+          graft.api.Table.readParquet(spark, st.path)
         case "csv" =>
           csvFidelity(st,
             w.option("header", st.header.toString)
@@ -316,7 +316,7 @@ object CopySql {
     } else {
       val target = resolve(st.ref)
       val incoming = st.format match {
-        case "parquet" => spark.read.parquet(st.path)
+        case "parquet" => graft.api.Table.readParquet(spark, st.path)
         case "csv" => csvFidelity(st,
           spark.read.option("header", st.header.toString)
             .option("sep", st.delimiter).option("inferSchema", "true"))(

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types._
 /** Defers expensive scalar projections past a global Sort
   * (optimization round 18, guide §1.2 step 1 / §2.4).
   *
-  * A global `ORDER BY` plans as a range-partitioning exchange, and
+  * A global `ORDER BY` whose input is estimated above AQE's minimum
+  * partition size plans as a range-partitioning exchange (a smaller one
+  * sorts in one task, see [[SmallSortOneTask]]), and
   * computing the range bounds SAMPLES the child: the child RDD executes
   * once for the sampler and once for the shuffle write, so every
   * expression below the sort is evaluated TWICE per row. On this

@@ -91,7 +91,7 @@ object ExportSql {
         val target = s"${st.path}/$n.${st.format}"
         val w = spark.table(n).write.mode("overwrite")
         val back = st.format match {
-          case "parquet" => w.parquet(target); spark.read.parquet(target)
+          case "parquet" => w.parquet(target); graft.api.Table.readParquet(spark, target)
           case _ =>
             w.option("header", "true").csv(target)
             spark.read.option("header", "true")
@@ -135,7 +135,7 @@ object ExportSql {
           s"malformed table name in manifest: '$n'")
         val target = s"${st.path}/$n.$format"
         val df = format match {
-          case "parquet" => spark.read.parquet(target)
+          case "parquet" => graft.api.Table.readParquet(spark, target)
           case _ =>
             val rd = spark.read.option("header", "true")
             ddl match {

@@ -135,14 +135,15 @@ object Events {
 
   /** The events file's inferred schema, or None when it stores `ts` with
     * the TIMESTAMP(NANOS) logical type — detected by whether Spark's
-    * native schema inference accepts the footer. The fixture has been
+    * parquet schema converter accepts the footer
+    * ([[graft.api.Table.readParquet]]). The fixture has been
     * regenerated as timestamp[us] (TESTDATA.md notwithstanding), so the
     * readers probe the actual file instead of assuming either unit. The
     * probe reads footer metadata only, no data, and the readers pass its
     * result on as their explicit schema, so each read infers once.
     */
   private def microsSchema(spark: SparkSession, path: String): Option[StructType] =
-    scala.util.Try(spark.read.parquet(path).schema).toOption.filter(
+    scala.util.Try(graft.api.Table.readParquet(spark, path).schema).toOption.filter(
       _.find(_.name == "ts").exists(_.dataType match {
         case TimestampNTZType | _: TimestampType => true
         case _ => false // NANOS read as a long

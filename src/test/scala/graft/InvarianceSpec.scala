@@ -197,4 +197,26 @@ class InvarianceSpec extends GraftSuite {
       assert(expected.nonEmpty && got == expected, q)
     }
   }
+
+  test("a small ORDER BY gives the same rows in the same order at 1, 4 and 32 shuffle partitions") {
+    // minPartitionSize 1 byte keeps the range exchange the one-task sort
+    // replaces, so both plans run at every partition count
+    def run(partitions: Int, minSize: String) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", minSize)
+      graft.functions.Registry.registerAll(s)
+      graft.api.Table.fromParquet(s, s"${sys.props("user.home")}/testdata/sf0.001/lineitem.parquet")
+        .sql("SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS net " +
+          "FROM lineitem ORDER BY l_shipdate DESC, net, l_orderkey, l_linenumber")
+        .toDF.collect().toSeq.map(_.toSeq.map {
+          case d: Double => java.lang.Double.doubleToLongBits(d)
+          case v => v
+        })
+    }
+    val expected = run(4, "1MB")
+    assert(expected.nonEmpty)
+    for (p <- Seq(1, 4, 32); minSize <- Seq("1MB", "1b"))
+      assert(run(p, minSize) == expected, s"$p partitions, minPartitionSize $minSize")
+  }
 }
